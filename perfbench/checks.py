@@ -1,4 +1,6 @@
-"""Correctness checks, run outside every timed region.
+"""Correctness checks, run outside every timed region and in a process of
+their own (:class:`Checker`), so that neither DuckDB nor the comparisons add
+to the CPU time or the memory the benchmark measures.
 
 Queries with an oracle are compared with DuckDB's result of the same
 oracle SQL over the same parquet files (row count, column names and the
@@ -11,12 +13,9 @@ landing files.
 from __future__ import annotations
 
 import os
-
-import duckdb
-import pandas as pd
-
-from datalake_nba_dmc_spark.sources import TABLES
-from tools.verify_local import canonical_hash
+import pickle
+import subprocess
+import sys
 
 #: Column names of the rows-only queries; their values may change on purpose.
 ROWS_ONLY_COLUMNS = {
@@ -28,32 +27,77 @@ ROWS_ONLY_COLUMNS = {
 SCALE = 10_000
 
 
-def duck(data_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute("SET threads TO 1")
+class Checker:
+    """The checking process: this file run as a script over ``data_dir``.
+    It answers each pickled ``(check name, args)`` on its stdin with a
+    pickled ``(ok, value)`` on its stdout, and exits at the end of its
+    input, so it also ends when the benchmark process does, however that
+    ends. The caller closes it."""
+
+    def __init__(self, data_dir: str):
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), data_dir],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+        )
+
+    def call(self, check: str, *args):
+        """The value of ``check(*args)`` in the checking process."""
+        pickle.dump((check, args), self.proc.stdin, protocol=pickle.HIGHEST_PROTOCOL)
+        self.proc.stdin.flush()
+        ok, value = pickle.load(self.proc.stdout)
+        if not ok:
+            raise RuntimeError(value)
+        return value
+
+    def close(self) -> None:
+        self.proc.stdin.close()
+        try:
+            self.proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            self.proc.kill()
+            self.proc.wait()
+        self.proc.stdout.close()
+
+
+#: State of the checking process: its DuckDB connection, the hash of
+#: ``tools/verify_local`` and what it has already computed from the inputs
+#: (oracle digests, expected gold marts). DuckDB is imported there only.
+_con = None
+_hash = None
+_expected: dict = {}
+
+
+def _init(data_dir: str) -> None:
+    global _con, _hash
+    import duckdb
+
+    from datalake_nba_dmc_spark.sources import TABLES
+    from tools.verify_local import canonical_hash
+
+    _con, _hash = duckdb.connect(), canonical_hash
+    _con.execute("SET threads TO 1")
     for t in TABLES:
-        con.execute(
+        _con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(data_dir, t + '.parquet')}'"
         )
-    return con
 
 
-def check_query(con, name: str, oracle: str | None, result: pd.DataFrame, cache: dict) -> str | None:
-    """None if ``result`` is right, else a one-line reason."""
+def check_query(name: str, oracle: str | None, result) -> str | None:
+    """None if ``result`` (a pandas DataFrame) is right, else a one-line reason."""
     if oracle is None:
         want = ROWS_ONLY_COLUMNS.get(name)
         if want is not None and sorted(result.columns) != sorted(want):
             return f"columns {sorted(result.columns)} != {sorted(want)}"
         return None if len(result) else "empty result"
-    if name not in cache:
-        odf = con.execute(oracle).df()
-        cache[name] = (len(odf), sorted(odf.columns), canonical_hash(odf))
-    rows, cols, digest = cache[name]
+    if name not in _expected:
+        odf = _con.execute(oracle).df()
+        _expected[name] = (len(odf), sorted(odf.columns), _hash(odf))
+    rows, cols, digest = _expected[name]
     if len(result) != rows:
         return f"rows {len(result)} != {rows}"
     if sorted(result.columns) != cols:
         return f"columns {sorted(result.columns)} != {cols}"
-    got = canonical_hash(result)
+    got = _hash(result)
     return None if got == digest else f"hash {got} != {digest}"
 
 
@@ -95,15 +139,14 @@ GROUP BY ALL
 """
 
 
-def gold_expected(con) -> dict[str, list[tuple]]:
-    return {
-        "customer_resume": sorted(con.execute(_GOLD_CUSTOMER).fetchall(), key=repr),
-        "nation_resume": sorted(con.execute(_GOLD_NATION).fetchall(), key=repr),
-    }
-
-
-def check_gold(con, lake: str, expected: dict[str, list[tuple]]) -> str | None:
-    """Compare the gold marts written under ``lake`` with ``expected``."""
+def check_gold(lake: str) -> str | None:
+    """Compare the gold marts written under ``lake`` with an independent
+    computation from the landing files."""
+    if "gold" not in _expected:
+        _expected["gold"] = {
+            "customer_resume": sorted(_con.execute(_GOLD_CUSTOMER).fetchall(), key=repr),
+            "nation_resume": sorted(_con.execute(_GOLD_NATION).fetchall(), key=repr),
+        }
     got = {
         "customer_resume": f"""
             SELECT custkey, customer_name, c_mktsegment,
@@ -116,11 +159,34 @@ def check_gold(con, lake: str, expected: dict[str, list[tuple]]) -> str | None:
             FROM read_parquet('{lake}/gold/nation_resume/*.parquet')""",
     }
     for mart, sql in got.items():
-        rows = sorted(con.execute(sql).fetchall(), key=repr)
-        want = expected[mart]
+        rows = sorted(_con.execute(sql).fetchall(), key=repr)
+        want = _expected["gold"][mart]
         if len(rows) != len(want):
             return f"{mart}: {len(rows)} rows != {len(want)}"
         for a, b in zip(rows, want):
             if a != b:
                 return f"{mart}: {a} != {b}"
     return None
+
+
+def _serve(data_dir: str) -> None:
+    """The checking process's loop (see :class:`Checker`)."""
+    replies = os.fdopen(os.dup(1), "wb")
+    os.dup2(2, 1)  # whatever the checks print goes to stderr, not the replies
+    _init(data_dir)
+    checks = {"check_query": check_query, "check_gold": check_gold}
+    while True:
+        try:
+            check, args = pickle.load(sys.stdin.buffer)
+        except EOFError:
+            return
+        try:
+            reply = (True, checks[check](*args))
+        except Exception as e:  # noqa: BLE001 - reported to the caller
+            reply = (False, f"{type(e).__name__}: {e}")
+        pickle.dump(reply, replies, protocol=pickle.HIGHEST_PROTOCOL)
+        replies.flush()
+
+
+if __name__ == "__main__":
+    _serve(sys.argv[1])

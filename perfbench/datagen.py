@@ -8,6 +8,8 @@ with ``sf`` like TPC-H (``lineitem`` = 6,000,000 × sf); ``documents`` and
 ``embeddings`` stay at 500 rows below sf 0.1.
 
 The same ``seed`` and ``sf`` always give byte-identical values.
+
+    python3 perfbench/datagen.py OUT_DIR SF SEED
 """
 
 from __future__ import annotations
@@ -163,3 +165,12 @@ def generate(out_dir: str, sf: float = 0.001, seed: int = 42) -> dict[str, int]:
         "customer": n_cust, "supplier": n_supp, "part": n_part, "orders": n_ord,
         "lineitem": n_li, "events": n_ev, "documents": n_docs, "embeddings": n_vecs,
     }
+
+
+if __name__ == "__main__":
+    import json
+    import sys
+
+    if len(sys.argv) != 4:
+        sys.exit("usage: python3 datagen.py OUT_DIR SF SEED")
+    print(json.dumps(generate(sys.argv[1], float(sys.argv[2]), int(sys.argv[3]))))

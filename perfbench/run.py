@@ -6,13 +6,16 @@
 Run from the repository root. One process, one client, closed loop: Spark
 runs as ``local[<nproc>]`` on seeded synthetic data generated under
 ``.perfbench/`` (the same for every seed; the seed sets the request order).
-A run is: imports and session start, data generation, one untimed cold
-round with every query result checked, untimed warm-up rounds
-(``WARMUP_ROUNDS``), then ``--seconds`` worth of timed
-rounds (see ``SECONDS_PER_ROUND``; always at least one). Medallion checks its
-gold marts after every round. With ``--trace 1`` the timed rounds are
-split into an untraced half and a traced half; the traced half records
-spans and Spark's event log and reports per-layer metrics.
+A run is: data generation (in a child process), imports and session start,
+one untimed cold round with every query result checked, untimed warm-up
+rounds (``WARMUP_ROUNDS``), then ``--seconds`` worth of timed rounds (see
+``SECONDS_PER_ROUND``; always at least one). Medallion checks its gold marts
+after every round. Checks run in a process of their own (``checks.py``).
+With ``--trace 1`` the timed rounds are split into an untraced half and a
+traced half; the traced half records spans and Spark's event log and
+reports per-layer metrics. ``--sf`` and ``--data DIR`` (an existing set of
+the ten parquet tables) replace the generated input, to compare it with
+other data.
 
 The last stdout line is one JSON object with ``correct``, ``attempted``,
 ``failed`` and ``metrics``; the line before it is the run record (host
@@ -26,8 +29,11 @@ import argparse
 import dataclasses
 import json
 import os
+import shlex
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 
@@ -37,17 +43,21 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 #: Scale of the generated input (TPC-H-like; lineitem = 6,000,000 x SF rows).
+#: At sf 0.01 a lake_queries run took 100 s on a 4-core host, too long for
+#: 48 runs in under an hour. A medallion round cost about the same CPU at
+#: 0.01 as at 0.001 (7.7 and 7.4 s), but its peak resident memory then
+#: varied by up to a fifth from run to run, as the driver heap reached 1g.
 SF = 0.001
 #: Seed of the generated input; the run's --seed only orders requests.
 DATA_SEED = 42
-#: Driver JVM heap, set explicitly: the engine's default (24g) exceeds the
-#: RAM of small hosts. 1g is Spark's own default and what the test suite
-#: runs every query with at sf 0.001.
+#: Driver JVM heap, set explicitly and fixed (``-Xms`` too): the engine's
+#: default (24g) exceeds the RAM of small hosts. 1g is Spark's own default
+#: and what the test suite runs every query with at sf 0.001.
 DRIVER_MEMORY = "1g"
 #: Untimed warm-up rounds after the cold round. A medallion round's CPU
-#: still falls by a third over the two rounds after the cold one (JIT); the
-#: query mixes are steady enough once every query has run once.
-WARMUP_ROUNDS = {"medallion": 2, "lake_queries": 0, "curation": 0}
+#: still falls by a third over the three rounds after the cold one (JIT);
+#: a lake_queries round's by a fifth from the first warm round to the next.
+WARMUP_ROUNDS = {"medallion": 3, "lake_queries": 1, "curation": 0}
 #: About how long a warm round takes on a quiet 4-core host. ``--seconds``
 #: buys ``seconds / SECONDS_PER_ROUND`` timed rounds: a fixed count per
 #: workload, so every run times the same rounds at the same stage of JIT
@@ -58,8 +68,9 @@ SECONDS_PER_ROUND = {"medallion": 4.0, "lake_queries": 8.0, "curation": 12.0}
 #: latencies move with how much CPU the host's other guests take (30-50%
 #: run-to-run spread measured on a shared 4-vCPU host whose steal time
 #: ranged 0.5-27%), so the reported latencies are CPU seconds: what the
-#: driver, the JVM and its Python workers spent, which the host's steal
-#: time barely changes. The wall-clock twins are printed and recorded too.
+#: driver, the JVM and its Python workers spent on the requests, which the
+#: host's steal time barely changes. The wall-clock twins are printed and
+#: recorded too; ``round_min_s`` is a round at each request's fastest.
 END_TO_END_UNITS = {
     "setup_s": "s",
     "cold_round_cpu_s": "s",
@@ -71,6 +82,7 @@ END_TO_END_UNITS = {
 WALL_UNITS = {
     "cold_round_s": "s",
     "round_s": "s",
+    "round_min_s": "s",
     "request_p50_s": "s",
     "request_p90_s": "s",
 }
@@ -93,6 +105,8 @@ def _args() -> argparse.Namespace:
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    p.add_argument("--sf", type=float, default=SF, help="scale of the generated input")
+    p.add_argument("--data", help="read this input directory instead of generating one")
     return p.parse_args()
 
 
@@ -102,7 +116,9 @@ def _launch_env(work: str, traced: bool, cpus: int) -> None:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     confs = [
-        f"spark.driver.extraJavaOptions=-Djava.io.tmpdir={tmp}",
+        # a fixed heap: a growing one left the JVM's peak resident memory
+        # 860-1220 MB from run to run of the same workload
+        f"spark.driver.extraJavaOptions=-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEMORY}",
         f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
         "spark.ui.showConsoleProgress=false",
     ]
@@ -120,7 +136,8 @@ def _launch_env(work: str, traced: bool, cpus: int) -> None:
         "SPARK_DRIVER_MEMORY": DRIVER_MEMORY,
         "SPARK_LOCAL_DIRS": tmp,
         "TMPDIR": tmp,
-        "PYSPARK_SUBMIT_ARGS": " ".join(f"--conf {c}" for c in confs) + " pyspark-shell",
+        "PYSPARK_SUBMIT_ARGS": " ".join(f"--conf {shlex.quote(c)}" for c in confs)
+        + " pyspark-shell",
         # no hsperfdata file under /tmp from the launcher or driver JVM
         "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData",
     })
@@ -135,6 +152,8 @@ def _quantile(values: list[float], q: int) -> float:
 
 def main() -> int:
     args = _args()
+    # a SIGTERM unwinds like an error, so every process started is stopped
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not (
         os.path.isfile(os.path.join(ROOT, "datalake_nba_dmc_spark", "__init__.py"))
         and os.path.isfile(os.path.join(ROOT, "tools", "verify_local.py"))
@@ -156,9 +175,42 @@ def main() -> int:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _generate(work: str, sf: float) -> str:
+    """Write the seeded input under ``work`` in a child process, so that its
+    memory and CPU never count against the driver."""
+    data_dir = os.path.join(work, "data")
+    subprocess.run(
+        [sys.executable, os.path.join(HERE, "datagen.py"), data_dir, str(sf), str(DATA_SEED)],
+        check=True, stdout=subprocess.DEVNULL,
+    )
+    return data_dir
+
+
+def _reap(proc: subprocess.Popen) -> None:
+    """Wait for ``proc`` to end; kill it if it has not after a minute."""
+    try:
+        proc.wait(timeout=60)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+
+
+def _input_facts(data_dir: str) -> dict[str, dict[str, int]]:
+    """Rows and bytes of every input table."""
+    import pyarrow.parquet as pq
+
+    facts = {}
+    for name in sorted(os.listdir(data_dir)):
+        path = os.path.join(data_dir, name)
+        facts[name.removesuffix(".parquet")] = {
+            "rows": pq.ParquetFile(path).metadata.num_rows,
+            "bytes": os.path.getsize(path),
+        }
+    return facts
+
+
 def _run(args, work: str, base: str, cpus: int, before: dict) -> int:
-    import datagen
-    from checks import duck
+    import checks
     from spans import Tracer, install_layer_spans, read_event_log
     from workloads import Workload
 
@@ -169,60 +221,78 @@ def _run(args, work: str, base: str, cpus: int, before: dict) -> int:
     traced = args.trace == 1
     stages: dict[str, float] = {}
     t = time.perf_counter()
-    spark = get_spark(f"perfbench-{args.workload}")
-    stages["get_spark_s"] = time.perf_counter() - t
-    gateway = spark.sparkContext._gateway
-    rss = host.RssSampler(gateway.proc.pid).start()
+    data_dir = os.path.abspath(args.data) if args.data else _generate(work, args.sf)
+    stages["datagen_s"] = time.perf_counter() - t
+    checker = checks.Checker(data_dir)
     try:
-        java_version = spark._jvm.System.getProperty("java.version")
         t = time.perf_counter()
-        data_dir = os.path.join(work, "data")
-        datagen.generate(data_dir, SF, DATA_SEED)
-        con = duck(data_dir)
-        stages["datagen_s"] = time.perf_counter() - t
+        spark = get_spark(f"perfbench-{args.workload}")
+        stages["get_spark_s"] = time.perf_counter() - t
+        gateway = spark.sparkContext._gateway
+        rss = host.RssSampler(gateway.proc.pid).start()
+        try:
+            java_version = spark._jvm.System.getProperty("java.version")
+            tracer = Tracer()
+            bench = Workload(
+                args.workload, spark, args.seed, data_dir, os.path.join(work, "lake"), checker,
+                host.CpuMeter(gateway.proc.pid, rss), tracer,
+            )
+            if traced:
+                install_layer_spans(tracer)
+                tracer.count_py4j(gateway._gateway_client)
+                spark.sparkContext.setJobGroup("pb|untimed", "pb|untimed")
 
-        tracer = Tracer()
-        bench = Workload(
-            args.workload, spark, args.seed, data_dir, os.path.join(work, "lake"), con, tracer
-        )
-        if traced:
-            install_layer_spans(tracer)
-            tracer.count_py4j(gateway._gateway_client)
-            spark.sparkContext.setJobGroup("pb|untimed", "pb|untimed")
+            bench.run_round(check=True)
+            for _ in range(WARMUP_ROUNDS[args.workload]):
+                bench.run_round(check=False)
+            # the harness's own set-up work is not the program's
+            stages["check_s"] = bench.check_s
+            setup_s = _since_process_start() - stages["datagen_s"] - stages["check_s"]
+            first_timed = len(bench.rounds)
 
-        bench.run_round(check=True)
-        for _ in range(WARMUP_ROUNDS[args.workload]):
-            bench.run_round(check=False)
-        setup_s = _since_process_start()
-        first_timed = len(bench.rounds)
-
-        n = max(1, round(args.seconds / SECONDS_PER_ROUND[args.workload]))
-        n_traced = max(1, n // 2) if traced else 0
-        for _ in range(max(1, n - n_traced)):
-            bench.run_round(check=False)
-        for _ in range(n_traced):
-            bench.run_round(check=False, traced=True)
-        stored_ratio = bench.stored_bytes_per_input_byte()
-        con.close()
+            n = max(1, round(args.seconds / SECONDS_PER_ROUND[args.workload]))
+            n_traced = max(1, n // 2) if traced else 0
+            for _ in range(max(1, n - n_traced)):
+                bench.run_round(check=False)
+            for _ in range(n_traced):
+                bench.run_round(check=False, traced=True)
+            stored_ratio = bench.stored_bytes_per_input_byte()
+        finally:
+            rss.stop()
+            memory = {
+                "jvm_hwm_mb": host.hwm_mb(gateway.proc.pid),
+                "driver_python_hwm_mb": host.hwm_mb(os.getpid()),
+            }
+            try:
+                spark.stop()
+                gateway.shutdown()
+            finally:
+                # the JVM ends when its stdin closes, even if stop() failed
+                gateway.proc.stdin.close()
+                _reap(gateway.proc)
+                leftover = host.wait_gone(rss.seen)
     finally:
-        rss.stop()
-        memory = {
-            "jvm_hwm_mb": host.hwm_mb(gateway.proc.pid),
-            "driver_python_hwm_mb": host.hwm_mb(os.getpid()),
-        }
-        spark.stop()
-        gateway.shutdown()
-        gateway.proc.stdin.close()
-        gateway.proc.wait(timeout=60)
-        leftover = host.wait_gone(rss.seen)
+        checker.close()
 
+    input_facts = _input_facts(data_dir)
     untraced = [r for r in bench.rounds[first_timed:] if not r.traced]
-    walls = [dt for r in untraced for _, dt, _ in r.requests]
-    cpus_s = [c for r in untraced for _, _, c in r.requests]
+    if args.workload == "medallion":
+        # a medallion request is one run_pipeline call, a round; its hops
+        # are layer spans, timed per hop in the record and the traced run
+        walls = [r.wall_s for r in untraced]
+        cpus_s = [r.cpu_s for r in untraced]
+    else:
+        walls = [dt for r in untraced for _, dt, _ in r.requests]
+        cpus_s = [c for r in untraced for _, _, c in r.requests]
+    fastest: dict[str, float] = {}
+    for r in untraced:
+        for name, dt, _ in r.requests:
+            fastest[name] = min(dt, fastest.get(name, dt))
     end_to_end = {
         "setup_s": setup_s,
         "cold_round_s": bench.rounds[0].wall_s,
         "round_s": statistics.median(r.wall_s for r in untraced),
+        "round_min_s": sum(fastest.values()),
         "request_p50_s": statistics.median(walls),
         "request_p90_s": _quantile(walls, 90),
         "peak_rss_mb": rss.peak_mb,
@@ -251,8 +321,10 @@ def _run(args, work: str, base: str, cpus: int, before: dict) -> int:
             "python": sys.version.split()[0],
             "git_commit": host.git_commit(ROOT),
         },
-        "sf": SF,
-        "data_seed": DATA_SEED,
+        "sf": None if args.data else args.sf,
+        "data_seed": None if args.data else DATA_SEED,
+        "data": args.data,
+        "input": input_facts,
         "setup_stages": stages,
         "first_timed_round": first_timed,
         "rounds": [dataclasses.asdict(r) for r in bench.rounds],

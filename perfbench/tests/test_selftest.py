@@ -109,3 +109,32 @@ def test_refuses_to_run_without_the_engine():
         assert '"metrics"' not in proc.stdout
     finally:
         shutil.rmtree(bare, ignore_errors=True)
+
+
+def test_checker_flags_a_wrong_result_and_ends_when_closed(tmp_path, monkeypatch):
+    import checks
+    import datagen
+    import duckdb
+    from datalake_nba_dmc_spark.sources import TABLES
+    from datalake_nba_dmc_spark.suite import load_all
+
+    data = str(tmp_path / "data")
+    datagen.generate(data, 0.001, 42)
+    monkeypatch.setenv("PYTHONPATH", ROOT)
+    name = "tpch_q1_pricing_summary"
+    oracle = load_all()[name].oracle
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(data, t + '.parquet')}'")
+    right = con.execute(oracle).df()
+    wrong = right.copy()
+    wrong.iloc[0, -1] = wrong.iloc[0, -1] + 1
+
+    checker = checks.Checker(data)
+    try:
+        assert checker.call("check_query", name, oracle, right) is None
+        assert checker.call("check_query", name, oracle, wrong).startswith("hash ")
+        assert checker.call("check_query", name, oracle, right.iloc[1:]).startswith("rows ")
+    finally:
+        checker.close()
+    assert checker.proc.returncode == 0

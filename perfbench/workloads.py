@@ -4,7 +4,8 @@
 ``bench.py``; a request is one builder call plus a noop-sink write, and the
 seed sets the request order of every round. ``medallion`` runs
 ``plans.medallion.run_pipeline`` from landing to gold into one scratch
-lake whose paths every round rewrites; its requests are the five hops.
+lake whose paths every round rewrites; one round is one request, and its
+five hops are timed one by one.
 """
 
 from __future__ import annotations
@@ -15,8 +16,8 @@ import time
 import traceback
 from dataclasses import dataclass, field
 
+import checks
 import host
-from checks import check_gold, check_query, gold_expected
 from spans import Tracer, table_files
 
 LAKE_QUERIES = [
@@ -82,33 +83,34 @@ class Round:
     requests: list[tuple[str, float, float]] = field(default_factory=list)
     #: share of CPU time the host gave to other guests during the round
     steal_pct: float = 0.0
-    #: CPU seconds the driver, the JVM and its Python workers used
+    #: CPU seconds the driver, the JVM and its Python workers used on the
+    #: round's requests
     cpu_s: float = 0.0
 
 
 class Workload:
     """Runs rounds of one workload and keeps every request's latency."""
 
-    def __init__(self, name, spark, seed, data_dir, lake_dir, con, tracer: Tracer):
+    def __init__(self, name, spark, seed, data_dir, lake_dir, checker, meter, tracer: Tracer):
         from datalake_nba_dmc_spark.plans import medallion
         from datalake_nba_dmc_spark.suite import load_all
 
         self.name = name
         self.spark = spark
         self.sc = spark.sparkContext
-        self.jvm_pid = self.sc._gateway.proc.pid
         self.rng = random.Random(seed)
         self.data_dir = data_dir
         self.lake_dir = lake_dir
-        self.con = con
+        self.checker: checks.Checker = checker
+        self.meter: host.CpuMeter = meter
         self.tracer = tracer
         self.specs = load_all()
         self.rounds: list[Round] = []
         self.attempted = 0
         self.failures: list[str] = []
-        self.oracle_cache: dict = {}
+        #: wall seconds spent waiting for correctness checks
+        self.check_s = 0.0
         self._hops: list[tuple[str, float, float]] = []
-        self._gold = None
         if name == "medallion":
             self.medallion = medallion
             for hop in HOPS:
@@ -123,33 +125,46 @@ class Workload:
             if self.tracer.active:
                 self.tracer.req = f"r{len(self.rounds)}:{hop}"
                 self.group(hop, "exec")
-            c0, t0 = self.cpu(), time.perf_counter()
+            c0, t0 = self.meter.start(), time.perf_counter()
             with self.tracer.span(hop, "plans.medallion"):
                 out = fn(*args, **kwargs)
-            self._hops.append((hop, time.perf_counter() - t0, self.cpu() - c0))
+            self._hops.append((hop, time.perf_counter() - t0, self.meter.since(c0)))
             return out
 
         return run
 
     def run_round(self, check: bool, traced: bool = False) -> float:
-        """One round; returns its wall time. Checks run outside the timing."""
+        """One round; returns its wall time. A round's wall and CPU time are
+        the sums over its requests (a medallion round's are its hops), so
+        checks and the harness's own readings stay outside them."""
         self.tracer.active = traced
         self.tracer.round = len(self.rounds)
-        ticks, cpu = host.cpu_ticks(), self.cpu()
+        ticks = host.cpu_ticks()
         if self.name == "medallion":
-            wall, reqs = self._medallion_round()
+            reqs = self._medallion_round()
         else:
-            wall, reqs = self._query_round(check)
+            reqs = self._query_round(check)
         self.tracer.active = False
-        done = Round(wall, traced, reqs, host.steal_pct(ticks, host.cpu_ticks()), self.cpu() - cpu)
+        done = Round(
+            sum(dt for _, dt, _ in reqs), traced, reqs,
+            host.steal_pct(ticks, host.cpu_ticks()), sum(c for _, _, c in reqs),
+        )
         if self.name == "medallion" and len(reqs) == len(HOPS):
-            self._check_gold()
+            self._check("gold", "check_gold", self.lake_dir)
         self.rounds.append(done)
-        return wall
+        return done.wall_s
 
-    def cpu(self) -> float:
-        """CPU seconds used so far by the driver, the JVM and its workers."""
-        return host.cpu_seconds(self.jvm_pid)
+    def _check(self, request: str, check: str, *args) -> None:
+        """Run one check in the checking process; a failure or an error
+        counts against ``request``."""
+        t0 = time.perf_counter()
+        try:
+            bad = self.checker.call(check, *args)
+        except Exception as e:  # noqa: BLE001 - a run never aborts on one check
+            bad = _reason(e)
+        self.check_s += time.perf_counter() - t0
+        if bad:
+            self._fail(request, bad)
 
     def _fail(self, request: str, reason: str) -> None:
         self.failures.append(f"round {len(self.rounds)} {request}: {reason}")
@@ -162,16 +177,13 @@ class Workload:
             self.attempted += 1
             try:
                 result, dt, cpu = self._request(name, collect=check)
-                reqs.append((name, dt, cpu))
-                if check:
-                    bad = check_query(
-                        self.con, name, self.specs[name].oracle, result, self.oracle_cache
-                    )
-                    if bad:
-                        self._fail(name, bad)
             except Exception as e:  # noqa: BLE001 - a run never aborts on one request
                 self._fail(name, _reason(e))
-        return sum(dt for _, dt, _ in reqs), reqs
+                continue
+            reqs.append((name, dt, cpu))
+            if check:
+                self._check(name, "check_query", name, self.specs[name].oracle, result)
+        return reqs
 
     def _request(self, name: str, collect: bool = False):
         """Build and execute one query: into the noop sink, or, for a
@@ -179,7 +191,7 @@ class Workload:
         Returns (result, wall seconds, CPU seconds)."""
         builder = self.specs[name].builder
         tr = self.tracer
-        c0 = self.cpu()
+        c0 = self.meter.start()
         if not tr.active:
             t0 = time.perf_counter()
             df = builder(self.spark, self.data_dir)
@@ -188,7 +200,7 @@ class Workload:
             else:
                 result = df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            return result, dt, self.cpu() - c0
+            return result, dt, self.meter.since(c0)
         tr.req = f"r{len(self.rounds)}:{name}"
         with tr.span(name, "request") as req:
             self.group(name, "build")
@@ -200,26 +212,18 @@ class Workload:
             self.group(name, "exec")
             with tr.span("exec", "exec"):
                 df.write.format("noop").mode("overwrite").save()
-        return None, req.t1 - req.t0, self.cpu() - c0
+        return None, req.t1 - req.t0, self.meter.since(c0)
 
     def _medallion_round(self):
         self.attempted += 1
         self._hops = []
         self.tracer.req = f"r{len(self.rounds)}"
-        t0 = time.perf_counter()
         try:
             with self.tracer.span(f"round{len(self.rounds)}", "round"):
                 self.medallion.run_pipeline(self.spark, self.data_dir, self.lake_dir)
         except Exception as e:  # noqa: BLE001
             self._fail("run_pipeline", _reason(e))
-        return time.perf_counter() - t0, self._hops
-
-    def _check_gold(self) -> None:
-        if self._gold is None:
-            self._gold = gold_expected(self.con)
-        bad = check_gold(self.con, self.lake_dir, self._gold)
-        if bad:
-            self._fail("gold", bad)
+        return self._hops
 
     def stored_bytes_per_input_byte(self) -> float:
         if self.name != "medallion":
