@@ -133,38 +133,22 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 32, seed: int = 42)
     return F.aggregate(base, init, step)
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
+def _lsh_star_edges(
+    sh_df: DataFrame,
+    id_col: str,
+    sh_col: str,
+    num_hashes: int,
+    bands: int,
+    seed: int,
 ) -> DataFrame:
-    """Candidate near-dup STAR edges via banded MinHash-LSH.
-
-    rows → shingle → K minhashes → B bands of K/B values → explode bands →
-    group by (band_idx, band_sig) bucket → link every member to the
-    bucket's MIN id. Star edges (bucket-min, member) are O(rows × B) total
-    — a naive within-bucket self-join is O(bucket²) and explodes on skewed
-    corpora (frequent shingles concentrate minhashes into hot buckets).
-    Dedup semantics are preserved through transitivity: connected
-    components over star edges equal components over all-pairs edges.
-    Returns distinct (id_a, id_b) with id_a < id_b.
-    """
+    """Banded MinHash-LSH star edges over a frame of non-NULL shingle
+    arrays: signature → ``bands`` slices of K/B values → posexplode →
+    ``band_key`` bucket → link every member to the bucket's MIN id.
+    Distinct (id_a, id_b) with id_a < id_b."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signature(F.col("_sh"), num_hashes, seed)
+    sig = minhash_signature(F.col(sh_col), num_hashes, seed)
     banded = (
-        with_shingles(df.select(id_col, text_col), text_col, shingle_n, out="_sh")
-        # token-less docs carry a NULL shingle array (see _grams_from_tokens)
-        # and must form NO candidates: a NULL array would flow through to a
-        # NULL band_sig, and xxhash64 silently SKIPS NULL arguments, so every
-        # content-less doc would collide into one per-band bucket and
-        # fabricate O(n²) candidate links between docs with nothing to
-        # compare. Drop them before the signature is even computed.
-        .filter(F.col("_sh").isNotNull())
-        .select(F.col(id_col), sig.alias("sig"))
+        sh_df.select(F.col(id_col), sig.alias("sig"))
         .select(
             id_col,
             F.posexplode(
@@ -187,62 +171,37 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_signature_arrow(num_hashes: int = 32, seed: int = 42):
-    """Vectorized minhash signature as an Arrow-batched Pandas UDF over the
-    per-shingle hash array (`array<long>` of xxhash64 % P, computed
-    JVM-side so no strings cross the Python boundary).
+def minhash_lsh_candidates(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """Candidate near-dup STAR edges via banded MinHash-LSH.
 
-    Kept as the tested-identical alternative for environments where the
-    expression fold regresses; NO LONGER the default. Receipt history:
-    before the single-`aggregate`-fold rewrite of
-    :func:`minhash_signature`, this numpy path measured 2× faster than K
-    separate expression evaluations; re-measured in r6 AFTER that rewrite
-    the Python-free fold wins — 0.129 s vs 0.288 s signature-only and
-    0.69 s vs 1.05 s full-pipeline at sf0.1, identical signatures — so
-    the default is the codegen path and this stays as the fallback."""
-    import random
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31)) for _ in range(num_hashes)]
-    a = np.array([c[0] for c in coeffs], dtype=np.int64)
-    b = np.array([c[1] for c in coeffs], dtype=np.int64)
-
-    # Chunked batch reduction (same shape as simhash_arrow): concatenate a
-    # chunk of rows and take per-row minima with ONE np.minimum.reduceat
-    # instead of allocating a (shingles × K) matrix per row.
-    chunk_rows = 512
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(hash_arrays: pd.Series) -> pd.Series:
-        n = len(hash_arrays)
-        zero = np.zeros(1, dtype=np.int64)
-        # shingle arrays are non-empty by construction (whole-text
-        # fallback); defensive zero-pad keeps reduceat well-defined anyway
-        arrs = [
-            np.asarray(h, dtype=np.int64) if len(h) else zero for h in hash_arrays
-        ]
-        lens = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=n)
-        out: list[np.ndarray] = []
-        for s in range(0, n, chunk_rows):
-            cl = lens[s : s + chunk_rows]
-            flat = np.concatenate(arrs[s : s + chunk_rows])
-            mins = np.minimum.reduceat(
-                (flat[:, None] * a[None, :] + b[None, :]) % _MERSENNE31,
-                np.concatenate([zero[:1], np.cumsum(cl[:-1])]),
-                axis=0,
-            )
-            out.extend(mins)
-        return pd.Series(out)
-
-    return sig
-
-
-def shingle_hashes(sh_col: Column) -> Column:
-    """Per-shingle 64-bit hash array reduced mod P (JVM-side)."""
-    return F.transform(sh_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
+    rows → shingle → K minhashes → B bands of K/B values → explode bands →
+    group by (band_idx, band_sig) bucket → link every member to the
+    bucket's MIN id. Star edges (bucket-min, member) are O(rows × B) total
+    — a naive within-bucket self-join is O(bucket²) and explodes on skewed
+    corpora (frequent shingles concentrate minhashes into hot buckets).
+    Dedup semantics are preserved through transitivity: connected
+    components over star edges equal components over all-pairs edges.
+    Returns distinct (id_a, id_b) with id_a < id_b.
+    """
+    shingled = (
+        with_shingles(df.select(id_col, text_col), text_col, shingle_n, out="_sh")
+        # token-less docs carry a NULL shingle array (see _grams_from_tokens)
+        # and must form NO candidates: a NULL array would flow through to a
+        # NULL band_sig, and xxhash64 silently SKIPS NULL arguments, so every
+        # content-less doc would collide into one per-band bucket and
+        # fabricate O(n²) candidate links between docs with nothing to
+        # compare. Drop them before the signature is even computed.
+        .filter(F.col("_sh").isNotNull())
+    )
+    return _lsh_star_edges(shingled, id_col, "_sh", num_hashes, bands, seed)
 
 
 def minhash_dedup(
@@ -254,10 +213,10 @@ def minhash_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    use_arrow: bool = False,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle once, persist, band,
-    bucket-join, verify candidates with exact Jaccard ≥ ``threshold``.
+    """Full MinHash-LSH near-dup pipeline: shingle once, persist, take the
+    :func:`minhash_lsh_candidates` star edges, verify each with exact
+    Jaccard ≥ ``threshold``.
 
     The shingle table is the expensive projection and is needed three times
     (signature/banding + both sides of the verification join) — computing it
@@ -269,38 +228,13 @@ def minhash_dedup(
         with_shingles(df.select(id_col, text_col), text_col, shingle_n)
         # NULL shingle arrays (token-less docs) form no candidates and would
         # otherwise collide into one per-band bucket (xxhash64 skips NULL
-        # args) — and the Arrow signature path would crash on a None array.
-        # Same guard as minhash_lsh_candidates; exact_dedup owns empty docs.
+        # args). Same guard as minhash_lsh_candidates; exact_dedup owns
+        # empty docs.
         .filter(F.col("sh").isNotNull())
         .select(id_col, "sh")
     )
     sh_df.persist()
-    rows_per_band = num_hashes // bands
-    if use_arrow:
-        sig = minhash_signature_arrow(num_hashes, seed)(shingle_hashes(F.col("sh")))
-    else:
-        sig = minhash_signature(F.col("sh"), num_hashes, seed)
-    banded = (
-        sh_df.select(F.col(id_col), sig.alias("sig"))
-        .select(
-            id_col,
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                )
-            ).alias("band_idx", "band_sig"),
-        )
-        .withColumn("band_key", F.xxhash64("band_idx", F.col("band_sig").cast("string")))
-        .select(id_col, "band_key")
-    )
-    rep = banded.groupBy("band_key").agg(F.min(id_col).alias("id_a"))
-    cand = (
-        banded.join(rep, on="band_key")
-        .filter(F.col(id_col) > F.col("id_a"))
-        .select("id_a", F.col(id_col).alias("id_b"))
-        .distinct()
-    )
+    cand = _lsh_star_edges(sh_df, id_col, "sh", num_hashes, bands, seed)
     verified = (
         cand.join(
             sh_df.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
@@ -583,7 +517,7 @@ def simhash_arrow(bits: int = 64):
     boundary). numpy unpacks each row's hashes into a (tokens × bits) sign
     matrix and reduces it in C; the 64 interpreted per-bit vote folds of
     :func:`_simhash_from_hashes` don't codegen and lose by ~10×. Bit-for-bit
-    identical output to the expression path (test_dedup covers both)."""
+    identical output to :func:`simhash` (pinned in test_dedup)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -601,10 +535,10 @@ def simhash_arrow(bits: int = 64):
         zero = np.zeros(1, dtype=np.int64)
         # empty docs are padded with one zero hash: its votes are all -1,
         # so the fingerprint is 0 — identical to the unpadded per-row math.
-        # NULL token arrays (NULL text) get the same pad: the expression
-        # path's NULL vote falls through otherwise(0) to fingerprint 0,
-        # and the two paths are pinned bit-identical (robustness_audit
-        # `nulls` finding — this was a worker TypeError on None)
+        # NULL token arrays (NULL text) get the same pad: simhash()'s
+        # NULL vote falls through otherwise(0) to fingerprint 0, and the
+        # two are pinned bit-identical (robustness_audit `nulls` finding
+        # — this was a worker TypeError on None)
         arrs = [
             np.asarray(h, dtype=np.int64) if h is not None and len(h) else zero
             for h in hash_arrays
@@ -632,23 +566,22 @@ def with_simhash(
     text_col: str = "text",
     out: str = "sh",
     bits: int = 64,
-    use_arrow: bool = True,
     drop_empty: bool = False,
 ) -> DataFrame:
     """Staged SimHash: normalize+tokenize+hash runs once per row in its own
     projection; the vote reduction then reads a column attribute instead of
     recomputing the array (same staging rationale as :func:`with_shingles`).
-    Default path is the Arrow-vectorized reducer — a nuanced r6
-    measurement: the PROJECTION alone is faster as expressions (0.31 s vs
-    0.41 s at sf0.1), but the full ``simhash_near_dups`` pipeline is
+    The reducer is the Arrow-vectorized :func:`simhash_arrow` — a nuanced
+    r6 measurement: the PROJECTION alone is faster as expressions (0.31 s
+    vs 0.41 s at sf0.1), but the full ``simhash_near_dups`` pipeline is
     faster with Arrow (0.96 s vs 1.15 s): the fingerprint feeds the
     16-bit banding fan-out, and interpreted higher-order-function
     expressions get no common-subexpression elimination there — the vote
     reduction re-evaluates per band reference — while the Arrow UDF
     column materializes once. (MinHash went the OTHER way: its full
-    pipeline is faster pure-expression; each family's default is its
-    measured full-pipeline winner.) ``use_arrow=False`` keeps the plan
-    Python-free.
+    pipeline is faster pure-expression; each family runs its measured
+    full-pipeline winner.) The column-level :func:`simhash` is the
+    bit-identical expression reference.
 
     ``drop_empty=True`` removes content-less docs (NULL / empty /
     whitespace-only text) BEFORE the vote reduction: their fingerprint is
@@ -676,14 +609,11 @@ def with_simhash(
             F.col(text_col).isNotNull()
             & (F.regexp_replace(F.col(text_col), r"\s+", "") != "")
         )
-    staged = staged.withColumn(
-        "_tok_hashes", F.transform(toks, lambda t: F.xxhash64(t))
+    return (
+        staged.withColumn("_tok_hashes", F.transform(toks, lambda t: F.xxhash64(t)))
+        .withColumn(out, simhash_arrow(bits)(F.col("_tok_hashes")))
+        .drop("_tok_hashes")
     )
-    if use_arrow:
-        reduced = staged.withColumn(out, simhash_arrow(bits)(F.col("_tok_hashes")))
-    else:
-        reduced = staged.withColumn(out, _simhash_from_hashes(F.col("_tok_hashes"), bits))
-    return reduced.drop("_tok_hashes")
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -946,6 +876,10 @@ def incremental_dedup(
     — one corpus scan, no corpus shuffle — and computes exact Jaccard
     from intersection counts and broadcast shingle sizes. Batch-internal
     duplicates resolve by min-id (same convention as :func:`exact_dedup`).
+    Exactly one batch row survives per fingerprint: the lowest
+    (``id_col``, raw ``text_col``) pair, so two rows that share an id and
+    normalized text but differ in raw text (``"Hello World"`` vs
+    ``"hello   world"``) resolve to the same row under any layout.
 
     ``gram_fanout_cap`` bounds the batch-internal pair blowup: a gram
     shared by k batch docs would otherwise generate O(k²) candidate pairs
@@ -1082,9 +1016,10 @@ def incremental_dedup(
     # exact: drop batch rows whose fingerprint exists in the corpus, then
     # keep the min-id representative per batch fingerprint — one window
     # (r16; the old min-agg + semi-join back re-scanned the batch and
-    # shuffled twice for the same keep-lowest-id-per-group decision)
+    # shuffled twice for the same keep-lowest-id-per-group decision). The
+    # raw text breaks id ties, so the winner never depends on row order.
     hit_fps = hits.filter(F.col("_kind") == 0).select(F.col("_hfp").alias("_fp"))
-    w_fp = Window.partitionBy("_fp").orderBy(id_col)
+    w_fp = Window.partitionBy("_fp").orderBy(id_col, text_col)
     fresh = (
         b_fp.join(F.broadcast(hit_fps), on="_fp", how="left_anti")
         .withColumn("_rn", F.row_number().over(w_fp))

@@ -53,35 +53,22 @@ def test_minhash_signature_deterministic_and_sized(spark):
     assert sigs[0]["sig"] != sigs[2]["sig"]
 
 
-def test_minhash_arrow_equals_expression_fold(spark):
-    from datalake_nba_dmc_spark.operators.dedup import (
-        minhash_signature_arrow,
-        shingle_hashes,
-        shingles,
-    )
-
-    df = spark.createDataFrame([(DOC,), (NEAR,), (OTHER,)], ["text"])
-    both = df.select(
-        minhash_signature(shingles("text"), 32).alias("expr"),
-        minhash_signature_arrow(32)(shingle_hashes(shingles("text"))).alias("arrow"),
-    ).collect()
-    for r in both:
-        assert list(r["expr"]) == list(r["arrow"])
-
-
-def test_minhash_dedup_both_paths_agree(docs):
-    from datalake_nba_dmc_spark.operators.dedup import minhash_dedup
-
-    a = {(r["id_a"], r["id_b"]) for r in minhash_dedup(docs, use_arrow=True).collect()}
-    b = {(r["id_a"], r["id_b"]) for r in minhash_dedup(docs, use_arrow=False).collect()}
-    assert a == b and (1, 2) in a
-
-
 def test_minhash_lsh_finds_dups_not_unrelated(docs):
     pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(docs).collect()}
     assert (1, 2) in pairs  # exact dup always collides
     assert all(a < b for a, b in pairs)
     assert (1, 4) not in pairs and (2, 4) not in pairs  # unrelated doc
+
+
+def test_minhash_dedup_verifies_lsh_candidates(docs):
+    """minhash_dedup verifies the same star edges minhash_lsh_candidates
+    emits (one shared banding plan), so its pairs are a subset of them."""
+    from datalake_nba_dmc_spark.operators.dedup import minhash_dedup
+
+    cand = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(docs).collect()}
+    pairs = {(r["id_a"], r["id_b"]) for r in minhash_dedup(docs).collect()}
+    assert (1, 2) in pairs
+    assert pairs <= cand
 
 
 def test_jaccard_pairs_exact_value(spark, docs):
@@ -143,19 +130,19 @@ def test_simhash_star_clusters_match_allpairs(spark, docs):
 def test_simhash_arrow_matches_expression(spark):
     from datalake_nba_dmc_spark.operators.dedup import with_simhash
 
-    # None included: a NULL text must give the same fingerprint (0) on
-    # both paths — the Arrow reducer used to TypeError on it
+    # None included: a NULL text must give the same fingerprint (0) as the
+    # simhash() column — the Arrow reducer used to TypeError on it
     texts = [(i, t) for i, t in enumerate([DOC, NEAR, OTHER, "", "one", DOC * 3, None])]
     df = spark.createDataFrame(texts, ["doc_id", "text"])
     arrow = {
         r["doc_id"]: r["sh"]
-        for r in with_simhash(df, use_arrow=True).select("doc_id", "sh").collect()
+        for r in with_simhash(df).select("doc_id", "sh").collect()
     }
     expr = {
         r["doc_id"]: r["sh"]
-        for r in with_simhash(df, use_arrow=False).select("doc_id", "sh").collect()
+        for r in df.select("doc_id", simhash("text").alias("sh")).collect()
     }
-    assert arrow == expr
+    assert arrow == expr and len(arrow) == len(texts)
 
 
 def test_connected_components_chain_and_pair(spark):
@@ -347,6 +334,26 @@ def test_incremental_dedup_null_text_dropped(spark):
     )
     got = sorted(r.doc_id for r in incremental_dedup(corpus, batch).collect())
     assert got == [11]
+
+
+def test_incremental_dedup_id_tie_picks_lowest_raw_text(spark):
+    """Two batch rows sharing an id AND a fingerprint (same normalized
+    text, different raw text) resolve to one row — the lowest raw text —
+    whatever the input order and partitioning."""
+    from datalake_nba_dmc_spark.operators.dedup import incremental_dedup
+
+    corpus = spark.createDataFrame(
+        [(1, "a corpus document about something else")], "doc_id long, text string"
+    )
+    rows = [(7, "Hello World"), (7, "hello   world"), (8, "a fresh unrelated row")]
+    schema = "doc_id long, text string"
+    layouts = [
+        spark.createDataFrame(rows, schema).repartition(1),
+        spark.createDataFrame(rows[::-1], schema).repartition(4),
+    ]
+    for batch in layouts:
+        got = sorted(tuple(r) for r in incremental_dedup(corpus, batch).collect())
+        assert got == [(7, "Hello World"), (8, "a fresh unrelated row")]
 
 
 def test_incremental_cap_recounts_pairs_exactly(spark):

@@ -64,22 +64,22 @@ def test_driver_window_priority():
        latest_round (meaning this very window produced that row);
     3. backlog entries that didn't fit sit contiguously just past the
        edge (they lead the next round's cut);
-    4. the NO_ORACLE_PINNED names (rows-only by design — a window slot
+    4. the oracle-less specs (rows-only by design — a window slot
        spent on them can only yield a `no_oracle` err row) sit at the
        absolute BOTTOM of the rotation, outside the window forever
        (VERDICT r11 ask #2); they are exempt from the staleness and
-       contiguity rules their pinning intentionally violates.
+       contiguity rules their placement intentionally violates.
     """
     import glob
     import json
     import os
 
-    from datalake_nba_dmc_spark.suite import NO_ORACLE_PINNED, TOUCHED_R16
+    from datalake_nba_dmc_spark.suite import TOUCHED_R16
 
     specs = load_all()
     names = list(specs)
     window = names[:50]
-    pinned = set(NO_ORACLE_PINNED)
+    pinned = {n for n, s in specs.items() if s.oracle is None}
     # VERDICT r15 ask #1: optimization-round rewrites must be re-proved by
     # the driver's own oracle even when a slot checked them recently —
     # TOUCHED_R16 names are exempt from the staleness rule (and must all
@@ -89,12 +89,10 @@ def test_driver_window_priority():
         f"touched queries outside the window: {sorted(touched - set(window))}"
     )
 
-    # the pin itself: all 11 at the very bottom, none with an oracle
-    assert names[-len(NO_ORACLE_PINNED) :] == NO_ORACLE_PINNED
-    assert all(specs[n].oracle is None for n in NO_ORACLE_PINNED)
-    # and the pinned list is EXACTLY the registry's no-oracle set — a new
-    # rows-only registration must either get an oracle or join the pin
-    assert pinned == {n for n, s in specs.items() if s.oracle is None}
+    # the oracle-less specs close the rotation: the last names are
+    # exactly that set, and none of them appears any earlier
+    assert pinned and set(names[-len(pinned) :]) == pinned
+    assert not pinned & set(names[: -len(pinned)])
 
     last: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
