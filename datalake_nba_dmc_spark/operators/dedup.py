@@ -286,14 +286,19 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over an undirected edge list → (id, component),
-    component = min node id in the component.
+    component = min node id in the component. Every endpoint gets a label;
+    a node whose only edge is a self-loop is its own component (the same
+    answer as the recursive-CTE oracles).
 
     Iterative min-label propagation: every node starts labeled with its own
     id; each round, a node adopts the minimum label among itself and its
     neighbors; converged when a round changes nothing. Each round is one
     shuffle (groupBy node) — O(diameter) rounds, and near-dup graphs built
     from LSH star edges have tiny diameters (the bucket representative
-    links members directly), so 2–3 rounds in practice.
+    links members directly), so 2–3 rounds in practice. If ``max_iter``
+    rounds pass and the last one still changed a label, the labelling is
+    not a fixpoint (a high-diameter graph, e.g. a long chain): this raises
+    ``RuntimeError`` instead of returning under-merged components.
 
     Scale hygiene: ``localCheckpoint`` after every round truncates the plan
     lineage — without it the loop builds an exponentially nested plan that
@@ -345,115 +350,11 @@ def connected_components(
         n_changed = new_labels.filter(F.col("changed")).count()
         labels = new_labels.drop("changed")
         if n_changed == 0:
-            break
-    return labels
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star phase (edges are canonical (u, v) pairs, u != v):
-    every node links its strictly-LARGER neighbors to the minimum of its
-    closed neighborhood. agg + join, never collect_list — a hot node's
-    neighbor set streams through hash aggregation instead of
-    materializing as an array (the skew trap this algorithm exists to
-    survive)."""
-    both = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = both.groupBy("u").agg(F.min("v").alias("_nmin"))
-    mins = mins.select("u", F.least("_nmin", F.col("u")).alias("m"))
-    return (
-        both.join(mins, on="u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star phase: orient every edge toward its larger endpoint
-    (u = max, v = min), then every node links itself and all its SMALLER
-    neighbors to the smallest of them. Same agg + join shape."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    via_neighbors = (
-        oriented.join(mins, on="u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    via_self = mins.select("u", F.col("m").alias("v"))
-    return (
-        via_neighbors.union(via_self)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond" — public) → (id, component), component = min node id,
-    bit-identical output contract to :func:`connected_components`.
-
-    Why a second CC: min-label propagation converges in O(diameter)
-    rounds — the right tool for LSH star-edge graphs (diameter 2–3), the
-    wrong one for high-diameter graphs (redirect chains, citation paths,
-    CDC chunk-adjacency), where diameter ~ n and 20 rounds of
-    propagation silently under-merge. Star alternation contracts every
-    component onto its minimum in O(log n) rounds REGARDLESS of
-    diameter: large-star halves the distance of every far node to the
-    component min; small-star flattens local stars. Each phase is one
-    hash-agg plus one broadcast-free equi-join over the current edge
-    set; no phase ever materializes a neighbor list, so one hot node
-    (every near-dup mega-cluster has one) never builds a driver- or
-    task-killing array.
-
-    Convergence is checked EXACTLY (set equality via subtract on the
-    checkpointed canonical edge sets), not by a change counter on
-    labels: at the fixed point the edge set IS the answer — a star
-    forest (child, component-min). ``localCheckpoint`` per round
-    truncates the iterative lineage exactly like the propagation loop
-    above."""
-    cur = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if cur.isEmpty():
-        return cur.select(F.col("u").alias("id"), F.col("u").alias("comp"))
-    converged = False
-    for _ in range(max_iter):
-        # lazy checkpoint materialized by the fixed-point count — one
-        # job per round instead of two (the propagation-CC r16 rule)
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        # exact fixed-point test: both sides are DISTINCT sets, so equal
-        # counts + empty one-sided difference ⇔ set equality
-        if nxt.count() == cur.count() and nxt.subtract(cur).isEmpty():
-            cur = nxt
-            converged = True
-            break
-        cur = nxt
-    if not converged:
-        # an exhausted loop is not "slightly stale" here: a non-star
-        # edge set would emit MULTIPLE label rows per node. O(log n)
-        # convergence means the default 50 rounds covers any n < 2^50 —
-        # hitting this is a bug or an absurd max_iter, so fail loudly
-        # (the propagation CC above degrades gracefully instead because
-        # its per-node labels stay unique at every round)
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    # fixed point = star forest oriented (child > root): labels are the
-    # edges themselves plus one self-label per root
-    roots = cur.select(F.col("v").alias("id")).distinct()
-    return (
-        cur.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-        .union(roots.select("id", F.col("id").alias("comp")))
+            return labels
+    # a round that still changed labels means the labelling is not a
+    # fixpoint: returning it would silently under-merge components
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} rounds"
     )
 
 

@@ -430,8 +430,7 @@ def minhash_portable_clusters(
     (min-id → member), never within-bucket pairs — O(rows × B), the
     skew lesson from minhash_lsh_candidates. Components via
     :func:`~datalake_nba_dmc_spark.operators.dedup.connected_components`
-    (min-label, diameter ≤ 2 on star-edge graphs;
-    connected_components_star is the high-diameter swap-in)."""
+    (min-label propagation, diameter ≤ 2 on star-edge graphs)."""
     from datalake_nba_dmc_spark.operators.dedup import connected_components
 
     if num_hashes % bands != 0:

@@ -170,10 +170,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup clustering: exact 3-gram-Jaccard pairs (≥0.5) →
     connected components (iterative min-label propagation, D.connected_
-    components) → per-document cluster id + representative flag. The one
-    iterative algorithm in the suite, cross-checked against a DuckDB
-    RECURSIVE CTE computing min-reachable-id — the driver hash-compares
-    fixpoints, so convergence itself is oracle-verified."""
+    components, the engine's one CC) → per-document cluster id +
+    representative flag. The one iterative algorithm in the suite,
+    cross-checked against a DuckDB RECURSIVE CTE computing
+    min-reachable-id — the correctness gate hash-compares fixpoints, so
+    convergence itself is oracle-verified."""
     docs = TableRegistry(spark, sf_dir).documents
     from datalake_nba_dmc_spark.plans.curation import near_dup_pairs_exact
 

@@ -474,23 +474,19 @@ SELECT node AS id, MIN(r) AS comp FROM reach GROUP BY node
 
 @query("graph_connected_components", oracle=_CC_ORACLE)
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (operators/dedup.connected_components_star — Kiveris et al. 2014,
-    public): O(log n) rounds of two groupBy-min supersteps, each round
-    strictly shrinking labels toward the component minimum; converges on
-    ANY diameter (the min-label loop it generalizes needs diameter
-    rounds). The DuckDB twin is the exact fixpoint the loop converges
-    to: a recursive-CTE transitive closure (node, reachable-id) with
-    component = MIN reachable id — structurally independent (Spark
+    """Connected components by min-label propagation
+    (operators/dedup.connected_components, the engine's one CC): each
+    round is one groupBy-min superstep; at sf0.1 this link graph is
+    complete (101 nodes, diameter 1), so the loop converges in 2 rounds.
+    The edges filter ``src != dst``, so no node is labelled through a
+    self-loop alone. The DuckDB twin is the exact fixpoint the loop
+    converges to: a recursive-CTE transitive closure (node, reachable-id)
+    with component = MIN reachable id — structurally independent (Spark
     never materializes the closure; at 100 TB the closure is O(n·d)
-    rows, the star loop's state stays O(nodes))."""
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components_star,
-    )
+    rows, the propagation loop's state stays O(nodes))."""
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
 
-    return connected_components_star(
-        _edges(spark, sf_dir), src="src", dst="dst"
-    )
+    return connected_components(_edges(spark, sf_dir), src="src", dst="dst")
 
 
 _TRI_ORACLE = """

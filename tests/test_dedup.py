@@ -155,17 +155,33 @@ def test_connected_components_chain_and_pair(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 7}
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """Star CC is bit-identical to min-label CC on crafted and seeded
-    random graphs (the registered-query equivalence law)."""
+def _union_find_components(pairs):
+    """Plain-Python reference: min-id component label for every endpoint."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((x, find(x)) for x in parent)
+
+
+def test_connected_components_matches_union_find(spark):
+    """Min-label CC equals a union-find reference on a crafted graph (with
+    a self-loop pair) and on seeded random graphs."""
     import random
 
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
 
-    crafted = [(1, 2), (2, 3), (3, 4), (6, 5), (8, 7)]
+    crafted = [(1, 2), (2, 3), (3, 4), (6, 5), (8, 7), (9, 9), (9, 10)]
     rng = random.Random(42)
     cases = [crafted]
     for n, m in [(30, 25), (50, 80), (12, 40)]:
@@ -174,52 +190,41 @@ def test_connected_components_star_matches_propagation(spark):
         )
     for pairs in cases:
         edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        want = sorted(
+        got = sorted(
             (r.id, r.comp) for r in connected_components(edges).collect()
         )
-        got = sorted(
-            (r.id, r.comp)
-            for r in connected_components_star(edges).collect()
+        assert got == _union_find_components(pairs) and len(got) > 0
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """A 200-link chain needs ~200 propagation rounds: with max_iter=12
+    the loop fails loudly instead of returning under-merged components.
+    A 10-link chain converges within the default max_iter."""
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
+
+    def chain(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "id_a long, id_b long"
         )
-        assert got == want and len(got) > 0
+
+    with pytest.raises(RuntimeError, match="max_iter=12"):
+        connected_components(chain(200), max_iter=12)
+    got = {r.id: r.comp for r in connected_components(chain(10)).collect()}
+    assert got == {i: 0 for i in range(11)}
 
 
-def test_connected_components_star_chain_logarithmic(spark):
-    """The scale motivation, demonstrated: a 200-link chain converges
-    under star alternation within 12 rounds (O(log n)), where 12 rounds
-    of min-label propagation provably under-merge (O(diameter))."""
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    n = 200
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_a long, id_b long"
-    )
-    star = connected_components_star(edges, max_iter=12)
-    assert star.filter(F.col("comp") != 0).count() == 0
-    assert star.count() == n + 1
-    prop = connected_components(edges, max_iter=12)
-    assert prop.filter(F.col("comp") != 0).count() > 0
-
-
-def test_connected_components_star_empty_and_self_loops(spark):
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components_star,
-    )
+def test_connected_components_empty_and_self_loops(spark):
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(empty).collect() == []
+    assert connected_components(empty).collect() == []
     loops = spark.createDataFrame(
         [(3, 3), (4, 4), (1, 2)], "id_a long, id_b long"
     )
     got = sorted(
-        (r.id, r.comp) for r in connected_components_star(loops).collect()
+        (r.id, r.comp) for r in connected_components(loops).collect()
     )
-    assert got == [(1, 1), (2, 1)]
+    assert got == [(1, 1), (2, 1), (3, 3), (4, 4)]
 
 
 def test_dedup_clusters_representatives(spark):

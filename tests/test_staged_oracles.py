@@ -1128,18 +1128,15 @@ def test_r12_staged_ops_empty_and_degenerate_inputs(spark):
 
 @needs_testdata
 def test_connected_components_duckdb_twin(spark):
-    """connected_components_star AND connected_components (r11-staged
-    registration graph_connected_components) vs a DuckDB recursive-CTE
+    """connected_components (r11-staged registration
+    graph_connected_components) vs a DuckDB recursive-CTE
     twin: reach = transitive (node, reachable-id) closure over the
     undirected derived link graph, component = MIN reachable id — an
-    exact fixpoint formulation, structurally independent of both Spark
-    loops (which never materialize the closure)."""
+    exact fixpoint formulation, structurally independent of the Spark
+    loop (which never materializes the closure)."""
     from pyspark.sql import functions as F
 
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
     from datalake_nba_dmc_spark.sources import TableRegistry
 
     docs = TableRegistry(spark, SF).documents
@@ -1168,12 +1165,11 @@ def test_connected_components_duckdb_twin(spark):
         )
         .fetchall()
     )
-    for impl in (connected_components_star, connected_components):
-        got = sorted(
-            (r.id, r.comp)
-            for r in impl(edges, src="src", dst="dst").collect()
-        )
-        assert got == want and len(got) > 0
+    got = sorted(
+        (r.id, r.comp)
+        for r in connected_components(edges, src="src", dst="dst").collect()
+    )
+    assert got == want and len(got) > 0
     # the graph actually merges (components < nodes, not the identity)
     assert len({c for _, c in want}) < len(want)
 
@@ -1374,9 +1370,7 @@ def test_second_batch_staged_ops_layout_invariant(spark):
     input."""
     from pyspark.sql import functions as F
 
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components_star,
-    )
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
     from datalake_nba_dmc_spark.operators.graph import triangle_count
     from datalake_nba_dmc_spark.operators.portable_sketch import (
         cms_counters,
@@ -1395,7 +1389,7 @@ def test_second_batch_staged_ops_layout_invariant(spark):
         ).filter(F.col("src") != F.col("dst"))
 
     builders = {
-        "cc_star": lambda d: connected_components_star(
+        "cc": lambda d: connected_components(
             edges(d), src="src", dst="dst"
         ),
         "triangles": lambda d: triangle_count(edges(d)),
@@ -1662,16 +1656,14 @@ def test_coreness_duckdb_twin(spark):
 def test_second_batch_staged_ops_duplication_laws(spark):
     """Scale laws under 100% duplicated input (the dup audit gives
     staged ops only a rows-only gate; these pin the real invariants):
-    set-semantics operators (star CC, triangles, coreness, LSH clusters,
+    set-semantics operators (CC, triangles, coreness, LSH clusters,
     heavy-hitter ranking identity) are BIT-IDENTICAL, occurrence
     counters (CMS) double EXACTLY, and the bootstrap CI is bit-identical
     (per-id weights repeat, so every resample mean's numerator and
     denominator double together)."""
     from pyspark.sql import functions as F
 
-    from datalake_nba_dmc_spark.operators.dedup import (
-        connected_components_star,
-    )
+    from datalake_nba_dmc_spark.operators.dedup import connected_components
     from datalake_nba_dmc_spark.operators.graph import (
         coreness_micro,
         triangle_count,
@@ -1698,8 +1690,8 @@ def test_second_batch_staged_ops_duplication_laws(spark):
         return sorted(tuple(r) for r in df.collect())
 
     # set-semantics: bit-identical under duplication
-    assert rows(connected_components_star(edges(docs), "src", "dst")) == rows(
-        connected_components_star(edges(ddocs), "src", "dst")
+    assert rows(connected_components(edges(docs), "src", "dst")) == rows(
+        connected_components(edges(ddocs), "src", "dst")
     )
     assert rows(triangle_count(edges(docs))) == rows(
         triangle_count(edges(ddocs))

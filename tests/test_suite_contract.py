@@ -47,6 +47,11 @@ def test_entry_smoke(spark):
     assert set(m.oracle_sql()) <= set(m.queries())
 
 
+#: The round whose rewrites TOUCHED_R16 names; its staleness exemption
+#: holds only while that round's CORRECTNESS record is the newest.
+_TOUCHED_ROUND = 16
+
+
 def test_driver_window_priority():
     """The driver checks only the first ~50 registry entries per round
     (observed cap: exactly 50 in every CORRECTNESS_r0N). Data-driven
@@ -80,10 +85,25 @@ def test_driver_window_priority():
     names = list(specs)
     window = names[:50]
     pinned = {n for n, s in specs.items() if s.oracle is None}
+
+    last: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
+        for q in json.load(open(path)):
+            last[q] = max(last.get(q, 0), rnd)
+    latest_round = max(last.values())
+
     # VERDICT r15 ask #1: optimization-round rewrites must be re-proved by
     # the driver's own oracle even when a slot checked them recently —
     # TOUCHED_R16 names are exempt from the staleness rule (and must all
-    # actually BE in the window).
+    # actually BE in the window). The exemption lasts only while round
+    # 16's CORRECTNESS record is the newest: a later record means the
+    # window has re-proved them, so a list still present is stale.
+    assert latest_round <= _TOUCHED_ROUND or not TOUCHED_R16, (
+        f"CORRECTNESS_r{latest_round} has landed but TOUCHED_R16 still "
+        f"exempts round-{_TOUCHED_ROUND} rewrites from the staleness rule: "
+        "recut _CHECK_PRIORITY and clear or replace TOUCHED_R16"
+    )
     touched = set(TOUCHED_R16)
     assert touched <= set(window), (
         f"touched queries outside the window: {sorted(touched - set(window))}"
@@ -93,13 +113,6 @@ def test_driver_window_priority():
     # exactly that set, and none of them appears any earlier
     assert pinned and set(names[-len(pinned) :]) == pinned
     assert not pinned & set(names[: -len(pinned)])
-
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        for q in json.load(open(path)):
-            last[q] = max(last.get(q, 0), rnd)
-    latest_round = max(last.values())
 
     never_checked = [n for n in names if n not in last and n not in pinned]
     overflow = [n for n in never_checked if n not in window]
@@ -126,6 +139,15 @@ def test_driver_window_priority():
     assert tail_oldest == tail[: len(tail_oldest)], (
         "deferred-backlog entries must sit contiguously at the window edge"
     )
+
+
+def test_watch_names_are_extended():
+    """The FINAL line reads _WATCH entries from the EXTENDED timings only,
+    so a watched name promoted to HEADLINE would silently drop out of
+    it: every watched name must be an EXTENDED, non-HEADLINE query."""
+    import bench
+
+    assert set(bench._WATCH) <= set(bench.EXTENDED) - set(bench.HEADLINE)
 
 
 def test_bench_final_line_fits_tail_window():
